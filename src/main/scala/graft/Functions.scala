@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 import graft.core._
 
@@ -46,19 +48,27 @@ object Functions {
     }
   }
 
-  /** Register every engine scalar for SQL + Column use. Idempotent. */
+  /** The engine scalars under their SQL names. */
+  private val udfs: Seq[(String, UserDefinedFunction)] = Seq(
+    "surt" -> udf(surtFn),
+    "canonicalize_url" -> udf(canonFn),
+    "timestamp14" -> udf(ts14Fn),
+    "sha1_b32" -> udf(sha1B32Fn),
+    "decode_payload" -> udf(decodePayloadFn),
+    "dechunk" -> udf(dechunkFn),
+    "post_to_get" -> udf(postToGetFn),
+    "parse_headers" -> udf(parseHeadersFn),
+    "host_of" -> udf(hostOfFn),
+    "canon_all" -> udf(canonAllFn))
+
+  /** Register every engine scalar for SQL + Column use. Idempotent per
+    * session: a session whose function registry already holds every
+    * name is left as it is (frontiers and query builders call this on
+    * each construction). */
   def registerAll(spark: SparkSession): Unit = {
-    val u = spark.udf
-    u.register("surt", surtFn)
-    u.register("canonicalize_url", canonFn)
-    u.register("timestamp14", ts14Fn)
-    u.register("sha1_b32", sha1B32Fn)
-    u.register("decode_payload", decodePayloadFn)
-    u.register("dechunk", dechunkFn)
-    u.register("post_to_get", postToGetFn)
-    u.register("parse_headers", parseHeadersFn)
-    u.register("host_of", hostOfFn)
-    u.register("canon_all", canonAllFn)
+    val reg = spark.sessionState.functionRegistry
+    if (!udfs.forall { case (n, _) => reg.functionExists(FunctionIdentifier(n)) })
+      udfs.foreach { case (n, f) => spark.udf.register(n, f) }
   }
 
   // ---- Column API (native Catalyst expressions — codegen'd, no UDF

@@ -58,7 +58,10 @@ object SparkEntry {
         graft.core.CdxIndexing.pairRecords(records.iterator).flatMap(CdxPipeline.toCdxRow)
       }
     }
-    cdx.toDF().orderBy($"urlkey", $"timestamp", $"filename")
+    // end the per-row work at an exchange: the final sort's range
+    // sampler then reads its shuffled rows instead of serializing and
+    // reparsing every document a second time (as in CdxPipeline.mergedCdx)
+    cdx.toDF().repartition($"urlkey").orderBy($"urlkey", $"timestamp", $"filename")
   }
 
   // =================================================================

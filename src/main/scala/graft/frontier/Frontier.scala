@@ -438,17 +438,21 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
     Frontier.rawFs(p, spark.sessionState.newHadoopConf()).exists(p)
   }
 
-  /** Content of a published marker, or None when absent/unreadable. */
+  /** Content of a published marker, or None when it is confirmed
+    * absent (also when it vanished between the existence check and the
+    * read). A marker that is present but cannot be read throws. */
   private def readMarker(name: String): Option[String] = {
     val p = new org.apache.hadoop.fs.Path(cfg.checkpointDir, name)
-    try {
-      val fs = Frontier.rawFs(p, spark.sessionState.newHadoopConf())
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
-      }
-    } catch { case _: Exception => None }
+    val fs = Frontier.rawFs(p, spark.sessionState.newHadoopConf())
+    if (!fs.exists(p)) None
+    else try {
+      val in = fs.open(p)
+      try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
+    } catch {
+      case e: java.io.IOException =>
+        if (!fs.exists(p)) None
+        else throw new java.io.IOException(s"marker $p is present but unreadable", e)
+    }
   }
 
   private def deleteMarker(name: String): Unit = {
@@ -1032,15 +1036,22 @@ class Frontier(spark: SparkSession, cfg: FrontierConfig,
   }
 
   /** Run ids the BACKLOG_BASE-`run` marker claims to have folded into
-    * itself (empty for pre-tiering markers without the field). Cached:
-    * marker content is immutable once published. */
+    * itself (empty for pre-tiering markers without the field, and for a
+    * marker confirmed absent). Only a marker that was read is cached:
+    * its content is immutable once published. A marker that is present
+    * but unreadable throws — taking it as claiming nothing would make
+    * `backlogRuns` read the runs it folded a second time. */
   private def foldedClaims(run: Int): Seq[Int] =
-    foldedClaimsCache.computeIfAbsent(run, { r =>
-      readMarker(s"BACKLOG_BASE-$r.json").toSeq.flatMap { js =>
-        FoldedRe.findFirstMatchIn(js).toSeq.flatMap(
-          _.group(1).split(",").toSeq.map(_.trim).flatMap(_.toIntOption))
+    Option(foldedClaimsCache.get(run)).getOrElse {
+      readMarker(s"BACKLOG_BASE-$run.json") match {
+        case None => Nil
+        case Some(js) =>
+          val claims = FoldedRe.findFirstMatchIn(js).toSeq.flatMap(
+            _.group(1).split(",").toSeq.map(_.trim).flatMap(_.toIntOption))
+          foldedClaimsCache.putIfAbsent(run, claims)
+          claims
       }
-    })
+    }
 
   private val FoldedRe = """"folded"\s*:\s*\[([0-9,\s]*)\]""".r
   private val foldedClaimsCache =

@@ -26,8 +26,9 @@ final case class CdxRow(
   * Plan shape (SURVEY.md §3): both are NARROW pipelines — the scan task
   * holds a whole file in order, so the greedy request/response pairing
   * fold runs fused inside the scan and the job has ZERO shuffles. A
-  * merged, sorted CDX (the reason urlkey is SURT) adds exactly one
-  * `orderBy(urlkey, timestamp)` range exchange at the very end. */
+  * merged, sorted CDX (the reason urlkey is SURT) adds two exchanges:
+  * a hash exchange on urlkey that ends the fused scan, then the
+  * `orderBy(urlkey, timestamp)` range exchange (see `mergedCdx`). */
 object CdxPipeline {
 
   /** `index` CLI: JSONL projection of record fields; exact output parity
@@ -86,11 +87,20 @@ object CdxPipeline {
   }
 
   /** Merged, globally sorted CDX — the batch equivalent of merging
-    * per-file indexes; single range-partitioned sort. */
+    * per-file indexes; one range-partitioned sort.
+    *
+    * The range exchange's partitioner samples its child with a job of
+    * its own. Were that child the fused scan, every WARC would be
+    * inflated, framed and projected twice: once for the sample, once
+    * for the sort's map side. The hash exchange on urlkey ends the scan
+    * at a shuffle whose map output the sampler and the sort's map side
+    * both reuse, so the scan runs once and both read the projected rows,
+    * which are far smaller than the WARC input. */
   def mergedCdx(spark: SparkSession, paths: Seq[String]): Dataset[CdxRow] = {
-    val ds = cdxDataset(spark, paths)
-    ds.orderBy(org.apache.spark.sql.functions.col("urlkey"),
-      org.apache.spark.sql.functions.col("timestamp"))
+    import org.apache.spark.sql.functions.col
+    cdxDataset(spark, paths)
+      .repartition(col("urlkey"))
+      .orderBy(col("urlkey"), col("timestamp"))
   }
 
   /** Pairing as a standalone operator over an already-materialized

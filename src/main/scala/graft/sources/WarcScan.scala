@@ -80,7 +80,10 @@ object WarcRow {
   *
   * Because each task sees a whole file in order, order-dependent
   * operators (request/response pairing) run fused inside the scan with
-  * ZERO shuffle — see CdxPipeline.
+  * ZERO shuffle — see CdxPipeline. A plan that range-sorts the scan's
+  * output must end the scan at an exchange first (as
+  * `CdxPipeline.mergedCdx` does): the range partitioner's sampling job
+  * would otherwise run the whole scan a second time.
   */
 object WarcScan {
 

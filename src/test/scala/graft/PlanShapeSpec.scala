@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.graftprobe.StageProbe
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape audit: the properties that matter at 100 TB, asserted on
@@ -41,11 +42,16 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
     assert(p.contains("aggregate("), s"built-in higher-order fn expected:\n$p")
   }
 
-  test("warc cdx pipeline stays narrow (no exchange before the final sort)") {
+  test("q25: the per-document WARC round trip ends at an exchange") {
     val df = SparkEntry.queries("q25_warc_cdx")(spark, sfDir)
-    val p = df.queryExecution.executedPlan.toString
-    val exchanges = "Exchange".r.findAllIn(p).size
-    assert(exchanges <= 2, s"too many exchanges ($exchanges):\n$p") // range sort (+AQE shuffle read)
+    // round-robin spreads the documents over the cores; the hash
+    // exchange ends the serialize+reparse projection, so the range
+    // sort's sampler reads its shuffled rows instead of re-running it
+    assert(exchanges(df) == Seq("range" -> Seq("urlkey", "timestamp"),
+      "hash" -> Seq("urlkey"), "roundrobin" -> Nil))
+    val stages = StageProbe.stagesRun(spark.sparkContext)(df.collect())
+    assert(stages.count(s => StageProbe.operators(s).contains("MapPartitions")) == 1,
+      s"projection ran in more than one stage: ${stages.map(StageProbe.operators)}")
   }
 
   test("q34: batch top-k broadcasts the query side (no corpus shuffle before scoring)") {

@@ -105,6 +105,14 @@ class FrontierSpec extends AnyFunSuite with SparkTestBase {
     p.toString
   }
 
+  /** Recursive copy: snapshots checkpoint dirs to simulate a crash. */
+  private def copyRec(src: Path, dst: Path): Unit =
+    Files.walk(src).iterator().asScala.foreach { p =>
+      val t = dst.resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(t)
+      else { Files.createDirectories(t.getParent); Files.copy(p, t) }
+    }
+
   private def runWaves(dirName: String, waves: Int, partitions: Int): (Frontier, Vector[WaveResult]) = {
     val cfg = FrontierConfig(checkpointDir = tmpDir(dirName), hostBudget = 5, seenShards = 16)
     val f = new Frontier(spark, cfg)
@@ -392,12 +400,6 @@ class FrontierSpec extends AnyFunSuite with SparkTestBase {
     assert(Files.exists(Paths.get(ckDir, "BACKLOG_BASE-2.json")))
 
     // snapshot the pre-merge run + deltas so the GC can be "un-done"
-    def copyRec(src: Path, dst: Path): Unit =
-      Files.walk(src).iterator().asScala.foreach { p =>
-        val t = dst.resolve(src.relativize(p).toString)
-        if (Files.isDirectory(p)) Files.createDirectories(t)
-        else { Files.createDirectories(t.getParent); Files.copy(p, t) }
-      }
     val snap = Paths.get(tmpDir("backlogcrashgc-snap"))
     copyRec(Paths.get(ckDir, "backlog_base", "upto=2"), snap.resolve("upto=2"))
     Files.copy(Paths.get(ckDir, "BACKLOG_BASE-2.json"), snap.resolve("BACKLOG_BASE-2.json"))
@@ -444,6 +446,44 @@ class FrontierSpec extends AnyFunSuite with SparkTestBase {
     val healed = f2.pendingDf(6).select("surt_key").collect()
       .map(_.getString(0)).sorted.toVector
     assert(healed == truth, "healing changed the pending view")
+  }
+
+  test("unreadable backlog marker fails loudly and is not cached") {
+    val ckDir = tmpDir("backlogunreadable")
+    val cfg = FrontierConfig(checkpointDir = ckDir, hostBudget = 4, headMult = 1,
+      backlogBuckets = 8, seenShards = 16, compactEvery = 1000, fastMode = true)
+    val f = new Frontier(spark, cfg)
+    f.initialize(Frontier.syntheticSeeds(spark, 3000, hostPool = 40))
+    (1 to 6).foreach(_ => f.runWave())
+    f.compactBacklog(2)
+    val snap = Paths.get(tmpDir("backlogunreadable-snap"))
+    copyRec(Paths.get(ckDir, "backlog_base", "upto=2"), snap.resolve("upto=2"))
+    val marker2 = Files.readAllBytes(Paths.get(ckDir, "BACKLOG_BASE-2.json"))
+    f.compactBacklog(4) // merge: run 4 claims run 2
+    val truth = f.pendingDf(6).select("surt_key").collect()
+      .map(_.getString(0)).sorted.toVector
+    // crash before the folded run's GC: run 2 is back next to run 4,
+    // so only run 4's claim keeps run 2's rows from being read twice
+    copyRec(snap.resolve("upto=2"), Paths.get(ckDir, "backlog_base", "upto=2"))
+    Files.write(Paths.get(ckDir, "BACKLOG_BASE-2.json"), marker2)
+    val marker4 = Paths.get(ckDir, "BACKLOG_BASE-4.json")
+    val content4 = Files.readAllBytes(marker4)
+    // a directory at the marker's name: listed as a marker, unreadable
+    // (a chmod would not block a read by root)
+    Files.delete(marker4)
+    Files.createDirectory(marker4)
+    val f2 = new Frontier(spark, cfg)
+    val e = intercept[Exception](f2.pendingDf(6).count())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(x => String.valueOf(x.getMessage).contains("BACKLOG_BASE-4.json")),
+      s"failure does not name the marker: $e")
+    // once readable again the same instance reads the claim: the
+    // failure was not cached as "claims nothing"
+    Files.delete(marker4)
+    Files.write(marker4, content4)
+    val resumed = f2.pendingDf(6).select("surt_key").collect()
+      .map(_.getString(0)).sorted.toVector
+    assert(resumed == truth, s"pending diverged: ${resumed.size} rows vs ${truth.size}")
   }
 
   test("legacy fence/wave=N checkpoint layout fails loudly on resume") {

@@ -3,9 +3,11 @@ package graft.operators
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase
 import graft.core.CdxIndexing
+import org.apache.spark.graftprobe.StageProbe
 
 /** The fixture goldens again, but through Spark execution (scan → fused
-  * fold → Dataset), plus plan-shape assertions (zero shuffles). */
+  * fold → Dataset), plus plan-shape assertions: the fused scan has no
+  * exchange, and the merged CDX runs the scan once. */
 class CdxPipelineSpec extends AnyFunSuite with SparkTestBase {
 
   test("cdxj via Spark matches reference golden") {
@@ -39,13 +41,42 @@ class CdxPipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(rows.map(_.status) == Vector(Some(200), Some(200), Some(200)))
   }
 
-  test("cdx pipelines have zero shuffle (fused scan), merged cdx exactly one") {
-    val plan = CdxPipeline.cdxDataset(spark, Seq(fixturePath("example.warc.gz")))
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), s"unexpected shuffle in:\n$plan")
-    val merged = CdxPipeline.mergedCdx(spark, Seq(fixturePath("example.warc.gz")))
-      .queryExecution.executedPlan.toString
-    assert("Exchange".r.findAllIn(merged).size <= 2) // range exchange (+AQE read)
+  test("fused scan has no exchange; merged cdx hashes then range-sorts") {
+    val paths = Seq(fixturePath("example.warc.gz"))
+    assert(exchanges(CdxPipeline.cdxDataset(spark, paths)).isEmpty)
+    // the hash exchange on urlkey ends the fused scan, so the range
+    // sort's sampler reads shuffled rows, not the WARC files
+    assert(exchanges(CdxPipeline.mergedCdx(spark, paths)) ==
+      Seq("range" -> Seq("urlkey", "timestamp"), "hash" -> Seq("urlkey")))
+  }
+
+  test("merged cdx reads each WARC once: one scan stage, 1x input bytes") {
+    import spark.implicits._
+    val paths = Seq("example.warc.gz", "post-test.warc.gz", "example.warc",
+      "post-test-more.warc", "example-iana.org-chunked.warc", "redirect.warc").map(fixturePath)
+    val fixtureBytes = paths.map(p => new java.io.File(p).length).sum
+    def bytesRead: Long = { // as the benchmark counts scan input
+      import scala.jdk.CollectionConverters._
+      org.apache.hadoop.fs.FileSystem.getAllStatistics.asScala
+        .filter(_.getScheme == "file").map(_.getBytesRead).sum
+    }
+    val out = graft.Scratch.dir("merged-cdx").resolve("cdx").toString
+    val r0 = bytesRead
+    val stages = StageProbe.stagesRun(spark.sparkContext) {
+      CdxPipeline.mergedCdx(spark, paths).write.mode("overwrite").parquet(out)
+    }
+    val read = bytesRead - r0
+    assert(stages.count(s => StageProbe.operators(s).exists(_.startsWith("Scan binaryFile"))) == 1,
+      s"scan ran in more than one stage: ${stages.map(StageProbe.operators)}")
+    assert(read >= fixtureBytes && read < fixtureBytes * 3 / 2,
+      s"read $read bytes for $fixtureBytes bytes of WARC input")
+    // rows and order unchanged: the fused scan's rows, sorted by (urlkey, timestamp)
+    val merged = CdxPipeline.mergedCdx(spark, paths).collect().toVector
+    assert(merged.sortBy(r => (r.urlkey, r.timestamp)).map(r => (r.urlkey, r.timestamp)) ==
+      merged.map(r => (r.urlkey, r.timestamp)))
+    assert(merged.sortBy(_.toString) ==
+      CdxPipeline.cdxDataset(spark, paths).collect().toVector.sortBy(_.toString))
+    assert(spark.read.parquet(out).as[CdxRow].collect().toSet == merged.toSet)
   }
 
   test("pairDataset (explicit shuffle variant) agrees with fused path") {
